@@ -27,7 +27,7 @@ disagreed ~2x with same-code local reruns):
   each child scale block RETRY ONCE on a contended verdict, keeping
   the cleaner attempt.
 - SHUFFLE PARTITIONS SCALE WITH DATA: 32 at sf0.1, 100 at sf1, 320 at
-  sf10 (the sqrt-ish rule tools/q06_scale_probe.py measured at
+  sf10 (the sqrt-ish rule tools/q06_scale_probe.py@72b9015 measured at
   2.40x/decade vs 4.5-8x under fixed 32). On a real cluster AQE sizes
   partitions to data; the canonical bench does too, and each block
   records the setting it ran under.
@@ -126,10 +126,10 @@ class _IvfServing:
     the steady-state serving cost. Operating point: n_cells='auto'
     (sqrt n), n_probe=8, n_assign=2, quantize=True — int8 is the
     serving layout SCALING.md recommends (7.3x smaller index, -0.012
-    recall, search no slower — tools/quantize_probe.py), so the
+    recall, search no slower — tools/quantize_probe.py@72b9015), so the
     headline measures the recommended config (r6 verdict item 5).
     Recall at this operating point: 0.940 int8 vs 0.956 fp64
-    (tools/ann_recall.py / quantize_probe.py)."""
+    (tools/ann_recall.py / tools/quantize_probe.py@72b9015)."""
 
     def __init__(self) -> None:
         self.index = None

@@ -395,51 +395,6 @@ class TestDedup:
         assert sorted(map(tuple, win.collect())) == sorted(map(tuple, agg.collect()))
         assert win.columns == agg.columns
 
-    def test_priority_dedup_sortfree_matches_window(self, spark):
-        """The r13 sort-free (max + shuffle-hash join + min) form must
-        agree with the canonical window form on every key shape inside
-        its documented preconditions: duplicate maxima, negative
-        values, an all-null max group (DESC NULLS LAST parity via the
-        isNull disjunct), multi-row singleton keys — and its plan must
-        contain no Sort and no extra exchange beyond the two scans'."""
-        from waterdata_spark.operators.dedup import priority_dedup_sortfree
-
-        df = spark.createDataFrame(
-            [
-                ("a", 1, 10.0),
-                ("a", 2, 10.0),   # duplicate max: tiebreak decides
-                ("a", 3, -5.0),
-                ("b", 1, None),   # all-null max group survives
-                ("b", 2, None),
-                ("c", 7, 2.5),
-                ("c", 6, 2.5),
-                ("d", 9, -0.5),   # negative singleton
-            ],
-            "k string, tie int, pri double",
-        )
-        win = priority_dedup(df, ["k"], [F.col("pri").desc(), F.col("tie").asc()])
-        sf = priority_dedup_sortfree(df, ["k"], "pri", "tie")
-        assert sorted(map(tuple, win.select(*sf.columns).collect())) == sorted(
-            map(tuple, sf.collect())
-        )
-        # plan shape via the public explain capture
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            sf.explain("formatted")
-        text = buf.getvalue()
-        assert "Sort " not in text and "SortAggregate" not in text
-        assert "ShuffledHashJoin" in text
-        # payload columns outside the documented shape must be refused
-        import pytest
-
-        with pytest.raises(ValueError, match="payload columns"):
-            priority_dedup_sortfree(
-                df.withColumn("extra", F.lit(1)), ["k"], "pri", "tie"
-            )
-
 
 class TestFallbackJoin:
     def test_tier_assignment(self, spark, fact, dim):

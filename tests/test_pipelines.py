@@ -18,18 +18,55 @@ from waterdata_spark.pipelines.down import down_csv_stage, down_join_stage
 
 REF_DOWN = "/root/reference/down"
 HAVE_REF = os.path.exists(f"{REF_DOWN}/csvdispSPIp1.csv")
+FIXTURES_W = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "w")
+
+
+def _stage_down_pages(root: str) -> None:
+    """Rebuild the reference's raw down pages from the staged
+    ``fixtures/w`` parquet (tools/stage_w_fixtures.py read them through
+    the engine's own readers, all-string): 4 SPI and 2 BI CSV pages,
+    ResultsSite.xlsx, and one fact CSV per year keyed by the last 4
+    characters of the de-spaced ``Sample Date``. 2014-2016 keep the
+    fixture's column order, 2017+ use the later header order, so the
+    by-name union (§1.3) is exercised as on the real extracts."""
+    import numpy as np
+    import pandas as pd
+
+    from waterdata_spark.streaming.down_stream import FACT_COLUMNS
+
+    fx = {n: pd.read_parquet(f"{FIXTURES_W}/{n}.parquet") for n in ("spi", "bi", "sites", "data")}
+    for name, n_pages in (("SPI", 4), ("BI", 2)):
+        df = fx[name.lower()]
+        for i, rows in enumerate(np.array_split(np.arange(len(df)), n_pages), start=1):
+            df.iloc[rows].to_csv(f"{root}/csvdisp{name}p{i}.csv", index=False)
+    sites = fx["sites"].astype(object).where(fx["sites"].notna(), None)
+    write_xlsx(f"{root}/ResultsSite.xlsx", {"Sheet1": [list(sites.columns), *sites.values.tolist()]})
+    data = fx["data"]
+    years = data["Sample Date"].str.replace(r"\s", "", regex=True).str[-4:]
+    for y in sorted(years.unique()):
+        cols = list(data.columns) if y <= "2016" else FACT_COLUMNS
+        data.loc[years == y, cols].to_csv(f"{root}/rptinfo{y}.csv", index=False)
 
 
 @pytest.fixture(scope="module")
-def down_outputs(spark):
-    if not HAVE_REF:
-        pytest.skip("reference data absent")
+def down_dir(tmp_path_factory):
+    """The reference's down pages when present, else the same pages
+    staged from ``fixtures/w``."""
+    if HAVE_REF:
+        return REF_DOWN
+    root = str(tmp_path_factory.mktemp("down_pages"))
+    _stage_down_pages(root)
+    return root
+
+
+@pytest.fixture(scope="module")
+def down_outputs(spark, down_dir):
     site_sub, data = down_csv_stage(
         spark,
-        spi_paths=sorted(glob.glob(f"{REF_DOWN}/csvdispSPIp*.csv")),
-        bi_paths=sorted(glob.glob(f"{REF_DOWN}/csvdispBIp*.csv")),
-        sites_xlsx=f"{REF_DOWN}/ResultsSite.xlsx",
-        data_paths=sorted(glob.glob(f"{REF_DOWN}/rptinfo*.csv")),
+        spi_paths=sorted(glob.glob(f"{down_dir}/csvdispSPIp*.csv")),
+        bi_paths=sorted(glob.glob(f"{down_dir}/csvdispBIp*.csv")),
+        sites_xlsx=f"{down_dir}/ResultsSite.xlsx",
+        data_paths=sorted(glob.glob(f"{down_dir}/rptinfo*.csv")),
     )
     return site_sub.cache(), data.cache()
 
@@ -64,6 +101,46 @@ class TestDownPipeline:
         # get an address — the rest belong to systems whose SPI/BI pages
         # are not in the shipped subset
         assert enriched / n > 0.85
+
+
+class TestDownJoinTiebreak:
+    def test_tied_sites_pick_the_same_winner_in_either_input_order(self, spark):
+        """Two site rows equal on every dedup column the reference names
+        (tier sort column, ZIP_CODE, SITE_ID) but different SAMPLE POINT
+        NAME/AVAILABILITY: the winner must not depend on input order,
+        at any of the three tiers."""
+        from waterdata_spark.pipelines.down import SITE_FIELDS, down_join_transform
+
+        def site_row(name, availability):
+            row = dict.fromkeys(SITE_FIELDS)
+            row.update({
+                "PWSID": 6430001, "SYSTEM NAME": "SCENIC MHP", "Sample Location": "701",
+                "SITE_ID": "5", "ZIP_CODE": "16137",
+                "SAMPLE POINT NAME": name, "SAMPLE POINT AVAILABILITY": availability,
+            })
+            return tuple(row[c] for c in SITE_FIELDS)
+
+        site_schema = ", ".join(
+            f"`{c}` {'long' if c == 'PWSID' else 'string'}" for c in SITE_FIELDS
+        )
+        tied = [site_row("WELL 1", "PERMANENT"), site_row("WELL 2", "ABANDONED")]
+        fact = spark.createDataFrame(
+            [
+                (1, "701", 6430001, "SCENIC MHP"),  # tier 1
+                (2, "999", 6430001, "SCENIC MHP"),  # tier 2
+                (3, "999", 6430001, "RENAMED SYS"),  # tier 3
+            ],
+            "id int, `Sample Location` string, PWSID long, `SYSTEM NAME` string",
+        )
+        outs = []
+        for rows in (tied, tied[::-1]):
+            site = spark.createDataFrame(rows, site_schema).coalesce(1)
+            out = down_join_transform(site, fact)
+            outs.append(sorted(
+                (r["id"], r["SAMPLE POINT NAME"], r["SAMPLE POINT AVAILABILITY"]) for r in out.collect()
+            ))
+        assert all(r[1] is not None for r in outs[0])  # every tier found a site
+        assert outs[0] == outs[1]
 
 
 def _direct_fixture_sheets():
@@ -156,7 +233,7 @@ class TestComparePipeline:
 
 
 class TestDownStreaming:
-    def test_stream_equals_batch_on_full_corpus(self, spark, down_outputs, tmp_path):
+    def test_stream_equals_batch_on_full_corpus(self, spark, down_dir, down_outputs, tmp_path):
         """The reference lifecycle driven INCREMENTALLY (VERDICT r3
         missing #5): each yearly extract lands as one file, the stream
         picks it up as its own micro-batch (≥7 batches), conforms it,
@@ -170,11 +247,11 @@ class TestDownStreaming:
 
         landing = str(tmp_path / "landing")
         landed = stage_yearly_facts(
-            spark, sorted(glob.glob(f"{REF_DOWN}/rptinfo*.csv")), landing
+            spark, sorted(glob.glob(f"{down_dir}/rptinfo*.csv")), landing
         )
         assert len(landed) == 7
         # idempotent re-landing: second call stages nothing new
-        assert stage_yearly_facts(spark, sorted(glob.glob(f"{REF_DOWN}/rptinfo*.csv")), landing) == landed
+        assert stage_yearly_facts(spark, sorted(glob.glob(f"{down_dir}/rptinfo*.csv")), landing) == landed
 
         stream_df = down_stream(spark, site_sub, landing)
         assert stream_df.isStreaming

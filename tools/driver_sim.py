@@ -4,8 +4,8 @@ factory), importing __spark_entry__ exactly as the external driver does:
 smoke entry(), then run every queries() entry against its oracle_sql() twin.
 
 Usage: python tools/driver_sim.py   (expects FAILS: 0)"""
-import sys, math
-sys.path.insert(0, "/root/repo")
+import math, os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb, pandas as pd
 from pyspark.sql import SparkSession
 

@@ -26,7 +26,7 @@ import glob
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from waterdata_spark.session import get_spark  # noqa: E402
 from waterdata_spark.sources.csv import read_csv_multi  # noqa: E402

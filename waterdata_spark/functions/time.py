@@ -31,15 +31,3 @@ def ns_hour_of_day(name: str) -> Column:
     """Epoch-ns column → hour of (UTC) day, as long."""
     return F.expr(f"(`{name}` div {NS_PER_HOUR}) % 24").cast("long")
 
-
-def ns_to_timestamp(name: str) -> Column:
-    """Epoch-ns column → TIMESTAMP (microsecond precision, UTC
-    instant). For streaming windows/watermarks, where a real
-    timestamp type is required."""
-    return F.timestamp_micros(F.expr(f"`{name}` div 1000"))
-
-
-def ns_floor_bucket(name: str, bucket_ns: int) -> Column:
-    """Epoch-ns column → start of its tumbling bucket (epoch-ns,
-    long). Integer-arithmetic twin of a tumbling window assignment."""
-    return F.expr(f"(`{name}` div {bucket_ns}) * {bucket_ns}")

@@ -69,84 +69,6 @@ def priority_dedup_agg(df: DataFrame, keys: list[str], sort_key: Column) -> Data
     return best.select(*[F.col("__best")[c].alias(c) for c in df.columns])
 
 
-def priority_dedup_sortfree(
-    df: DataFrame,
-    keys: list[str],
-    max_col: str,
-    tiebreak_col: str,
-) -> DataFrame:
-    """C22, sort-FREE form for the ``(max_col DESC, tiebreak_col ASC)``
-    order — the q06 shape. Candidate plan (r13): the window form pays a
-    full per-partition Sort; the min_by aggregate is structurally a
-    SortAggregate (struct buffers fit neither HashAggregateExec — not
-    mutable — nor ObjectHashAggregateExec — TypedImperative only), so
-    it sorts too, with the ordering struct widening every row. This
-    form has NO Sort operator: one explicit hashpartitioning(keys)
-    exchange, reused by both consumers (ReuseExchange / AQE stage
-    reuse), then per partition a primitive-buffer HashAggregate
-    ``max(max_col)``, a SHUFFLE_HASH join back (build side = the
-    1-row-per-key maxima; both sides already carry the required
-    distribution, so the join adds no exchange), a null-safe
-    ``max_col == max`` filter, and a final HashAggregate
-    ``min(tiebreak_col)`` per ``(keys, max_col)`` — whose required
-    clustering is satisfied by the same partitioning (keys is a subset
-    of the grouping), so the whole post-shuffle pipeline is one stage
-    pair over one shuffle.
-
-    Semantics — identical to
-    ``priority_dedup(df, keys, [max desc, tiebreak asc])`` given the
-    preconditions below: ``(keys, tiebreak_col)`` unique makes the
-    order total, so the rn=1 row is exactly "max max_col, then min
-    tiebreak_col"; ``eqNullSafe`` reproduces DESC NULLS LAST (a null
-    loses to any non-null; an all-null group keeps its min-tiebreak
-    row, matched null-safely).
-
-    Preconditions (documented, not checked — callers outside them use
-    :func:`priority_dedup`):
-      - ``df`` columns are exactly ``keys + [max_col, tiebreak_col]``
-        (a wider payload would need re-attaching after the final agg);
-      - key values are non-null (the equi-join drops null-key groups
-        the window form would keep — TPC-H key columns qualify).
-
-    Verdict (r13, measured — plans/r13/q06_form_probe_sf10.json): NOT
-    used by q06. The fresh-JVM interleaved A/B at sf10 decomposed the
-    window form's wall with the noop sink: the EXCHANGE is ~70% of it
-    (scan 0.6s, scan+exchange 31.1s, full 42.2s in the same noise
-    window), the per-partition sort is minor — and this form cannot
-    reuse its one exchange across both consumers (column pruning
-    differentiates the two scan subtrees: 3-col probe side vs 2-col
-    max side), so it shuffles ~1.67x the window form's bytes. Measured
-    min 9.50s vs the window's 6.90s, 2/6 head-to-head. Kept as the
-    probed alternative for workloads whose exchange is NOT dominant
-    (e.g. pre-partitioned/bucketed input, where this form's zero Sort
-    wins); q06 keeps the single-shuffle window.
-    """
-    extra = set(df.columns) - set(keys) - {max_col, tiebreak_col}
-    if extra:
-        raise ValueError(
-            f"priority_dedup_sortfree: payload columns {sorted(extra)} not "
-            "supported — project first or use priority_dedup"
-        )
-    s = df.repartition(*[F.col(k) for k in keys])
-    mx = s.groupBy(*keys).agg(F.max(max_col).alias("__mx"))
-    # The max-match is written as a RANGE predicate, not an equality:
-    # `max_col <=> __mx` would be extracted into the join's equi-keys
-    # (ExtractEquiJoinKeys lifts null-safe equality), re-keying the
-    # join on (max_col, keys) and re-shuffling both sides — three
-    # exchanges instead of one reused one (observed at planning time).
-    # `max_col >= __mx` is equivalent against a per-key maximum (Spark
-    # orders NaN greatest and equal to itself, so NaN maxima match),
-    # stays a join condition, and keeps both sides on the keys-only
-    # partitioning. The isNull conjunct keeps the all-null group the
-    # way DESC NULLS LAST does.
-    j = s.join(mx.hint("shuffle_hash"), keys).filter(
-        (F.col(max_col) >= F.col("__mx"))
-        | (F.col(max_col).isNull() & F.col("__mx").isNull())
-    )
-    out = j.groupBy(*keys, max_col).agg(F.min(tiebreak_col).alias(tiebreak_col))
-    return out.select(*df.columns)
-
-
 def dedup_any(df: DataFrame, keys: list[str]) -> DataFrame:
     """C24: "any one row per key" — the reference documents the kept
     row as arbitrary (direct/direct_water_prep.py:130,144-145). Spark's

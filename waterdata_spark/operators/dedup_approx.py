@@ -109,7 +109,7 @@ def minhash_signature_frame(
         # no gain: hashing 8-char shingles is NOT the bottleneck; the
         # explode row stream and the 16 min-agg buffer updates dominate,
         # so the independent-hash form is kept for its stronger
-        # min-wise-independence (tools/x08_scale_probe.py for the
+        # min-wise-independence (tools/x08_scale_probe.py@72b9015 for the
         # saturation analysis).
         aggs = [
             F.min(F.xxhash64(F.lit(i), F.col("__s"))).alias(f"__h{i}")
@@ -328,7 +328,7 @@ def min_id_components(
        invariant while letting label chains HALVE per round: a path
        that needed O(diameter) propagate-only rounds converges in
        O(log diameter). Round/wall measurements on the x25/x31 oracle
-       graphs: tools/cc_rounds_probe.py (committed with this change).
+       graphs: tools/cc_rounds_probe.py@72b9015.
        Each round costs one extra small-frame join, repaid whenever it
        saves even one O(E) round.
 
@@ -373,7 +373,7 @@ def min_id_components(
             # always label-table VALUES, i.e. node ids), so
             # label(label)=label and the hop join would be pure
             # overhead (measured ~1 join/round on graphs that converge
-            # in 4-5 rounds, tools/cc_rounds_probe.py). Skip it.
+            # in 4-5 rounds, tools/cc_rounds_probe.py@72b9015). Skip it.
             stepped = cand.select(
                 F.col("node"),
                 F.col("__cand").alias("label"),

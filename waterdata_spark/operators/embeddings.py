@@ -31,7 +31,7 @@ Two fit paths, one projection:
   component sums; the driver sums P partition rows. Cost per row is
   O(d²) FLOPs with no row multiplication — ~d x cheaper than the
   exact path and the only practical fit at production dims (probed at
-  d=512 x 200k rows, tools/pca_scale_probe.py). Float64 summation is
+  d=512 x 200k rows, tools/pca_scale_probe.py@72b9015). Float64 summation is
   order-DEPENDENT across partitions, so the result is approximate
   (~1e-9 relative vs exact; tolerance-tested at 1e-6 on
   eigenvectors) and not bit-stable under repartitioning — use

@@ -4,7 +4,7 @@ At 100 TB an embedding corpus's dominant costs are storage and the
 bytes a search shuffle moves. Symmetric per-vector int8 quantization
 (`q = round(v / s)`, `s = max|v| / 127` — the standard scheme faiss'
 ``SQ8`` and every serving stack use) cuts both by ~4x [side-by-side
-parquet measurement in tools/quantize_probe.py] at a bounded cosine
+parquet measurement in tools/quantize_probe.py@72b9015] at a bounded cosine
 error: for unit vectors the per-element error is ≤ s/2, so
 ``|cos_q - cos| ≤ sqrt(d) * max|u| / 127`` — about 0.01-0.02 at d=64.
 

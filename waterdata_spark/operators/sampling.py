@@ -297,7 +297,7 @@ def cap_per_group(
     (audit form); ``mode='remove'`` (default) drops rows over the cap.
 
     ``plan`` picks the physical strategy, semantics identical
-    (equivalence test-pinned; measured in tools/cap_scale_probe.py):
+    (equivalence test-pinned; measured in tools/cap_scale_probe.py@72b9015):
     ``'split'`` (default) is the wide-row/document form above — at 8M
     x ~1 KB rows it beats the global window 2.1x and the gap grows
     with payload width, because the bulk's payloads never reach an

@@ -168,7 +168,7 @@ def _with_assignment(
         # float temporary instead of six: the dense double-branch
         # where() made the kernel allocation-bound — cost exploded
         # ~12× at large batch×k and went wildly unstable under 32-way
-        # parallelism (semdedup_k_probe, r9).
+        # parallelism (tools/semdedup_k_probe.py@72b9015, r9).
         p = float(10**round_dp)
         labs = np.empty(len(X), dtype="int32")
         coss = np.empty(len(X), dtype="float64")

@@ -624,7 +624,7 @@ def build_ivf_index(
     the standard asymmetric-search serving layout (queries stay
     full-precision; the per-cell rerank reconstructs batch-wise).
     Cosine error is bounded by ``sqrt(d)·max|u|/127`` (~0.01 at d=64;
-    recall measured in tools/quantize_probe.py)."""
+    recall measured in tools/quantize_probe.py@72b9015)."""
     d_unit = with_unit_vector(data.select(id_col, vec_col), vec_col).select(
         F.col(id_col).alias("vec_id"), F.col("__unit")
     )

@@ -111,7 +111,6 @@ def down_csv_stage(
     # POPULATION SERVED deliberately string so it survives joins
     spi = spi.withColumn("PWSID", F.col("PWSID").cast("long"))
     bi = bi.withColumn("PWSID", F.col("PWSID").cast("long"))
-    data = data.withColumn("PWSID", F.col("PWSID").cast("long"))
 
     # SPI ⟗ BI on the 3 shared identity keys (:296), then ⟕ sites (:302)
     spi_bi = suffixed_join(spi, bi, on=["PWSID", "SYSTEM NAME", "SITE ID"], how="full_outer")
@@ -148,9 +147,24 @@ def down_csv_stage(
         )
     )
 
-    # fact cleaning (:315-321): PDF artifact repair, trims, date de-spacing
-    data = (
-        data.distinct()
+    return site_sub, conform_fact(data)
+
+
+def conform_fact(data: DataFrame) -> DataFrame:
+    """Fact cleaning (down/down_water_prep.py:281-288,315-321): PWSID
+    cast, exact dedup, PDF-artifact repair, trims, date de-spacing.
+
+    One definition for batch and stream: on a batch frame
+    ``dropDuplicates()`` plans exactly as ``distinct()``; on a stream
+    (streaming/down_stream.py) it is the stateful dedup, GLOBAL across
+    micro-batches — a duplicate arriving years later is still dropped,
+    as the batch rerun over all files drops it. Unwatermarked state is
+    right for the bounded yearly corpus; unbounded feeds key the state
+    by content sha2 with a watermark (streaming/ops.py::dedup_stream).
+    """
+    return (
+        data.withColumn("PWSID", F.col("PWSID").cast("long"))
+        .dropDuplicates()
         .withColumn(
             "Sample Type",
             F.when(F.col("Sample Type") == "DISTRIBUTIO N", "DISTRIBUTION").otherwise(F.col("Sample Type")),
@@ -158,7 +172,6 @@ def down_csv_stage(
         .withColumn("SYSTEM NAME", F.trim("SYSTEM NAME"))
         .withColumn("Sample Date", F.regexp_replace("Sample Date", r"\s", ""))
     )
-    return site_sub, data
 
 
 def _normalize_sample_location(df: DataFrame, null_marker: str) -> DataFrame:
@@ -216,12 +229,19 @@ def down_join_transform(site_sub: DataFrame, data: DataFrame) -> DataFrame:
     # reference deleting the dim's suffixed copies (_z2/_z3, :534-536)
     payload = [c for c in site.columns if c not in tiers[0]]
     # per-tier winner selection mirrors :498-501 (tiers 1-2 sort by
-    # Sample Location desc, tier 3 by SYSTEM NAME desc) + deterministic tiebreak
-    tiebreak = [F.col("ZIP_CODE").asc_nulls_last(), F.col("SITE_ID").asc_nulls_last()]
+    # Sample Location desc, tier 3 by SYSTEM NAME desc), then ZIP_CODE,
+    # SITE_ID and every remaining site column in a fixed order: sites
+    # can tie on all of those (59 PWSIDs of the shipped data at tier 3),
+    # and only a total order picks the same winner on every run
+    def dedup_order(lead: str, keys: list[str]) -> list:
+        head = [lead, "ZIP_CODE", "SITE_ID"]
+        rest = [c for c in site.columns if c not in head and c not in keys]
+        return [F.col(lead).desc(), *[F.col(c).asc_nulls_last() for c in head[1:] + rest]]
+
     dedup_orders = [
-        [F.col("Sample Location").desc(), *tiebreak],
-        [F.col("Sample Location").desc(), *tiebreak],
-        [F.col("SYSTEM NAME").desc(), *tiebreak],
+        dedup_order("Sample Location", tiers[0]),
+        dedup_order("Sample Location", tiers[1]),
+        dedup_order("SYSTEM NAME", tiers[2]),
     ]
 
     return fallback_join(

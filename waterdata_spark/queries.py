@@ -65,10 +65,6 @@ def query(name: str, sql: str | None, doc: str = "", tags: list[str] | None = No
     return deco
 
 
-def _dec(c: str, scale: int = 2) -> F.Column:
-    return F.col(c).cast(f"decimal(18,{scale})")
-
-
 def _sum_money(c, scale: int = 2, alias: str | None = None):
     """Exact money sum, r13 SPLIT-LONG form (guide §2.3 narrower
     types, measured: plans/r13/q01_cents_probe_sf10.json).
@@ -1171,7 +1167,7 @@ def q18_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     # the max event_id — is FUSED into the as-of window via
     # right_order instead of a separate priority_dedup window: one
     # shuffle+sort of the clicks table eliminated (the q18 plan
-    # audit's tall pole; measured in tools/q18_scale_probe.py).
+    # audit's tall pole; measured in tools/q18_scale_probe.py@72b9015).
     # Result identical (oracle-hashed): among equal-(user, ts) clicks
     # the carry takes the LAST under event_id ASC == the max, exactly
     # the row the dedup window elected.

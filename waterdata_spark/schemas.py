@@ -155,12 +155,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.unix_micros("ts") * F.lit(1000).cast("long"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register the testdata tables as temp views for the SQL surface."""
-    for n in names or TESTDATA_TABLES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

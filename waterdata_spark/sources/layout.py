@@ -15,7 +15,7 @@ effectiveness is a property of the LAYOUT, paid once at write time.
 ``skipping_stats`` reads the footers back (pyarrow) and reports, for
 a given predicate range, how many files/row groups a stats-respecting
 scan must touch — the measurable pruning contract
-(tools/layout_probe.py commits the numbers; tests pin disjointness).
+(tools/layout_probe.py@72b9015 commits the numbers; tests pin disjointness).
 """
 
 from __future__ import annotations

@@ -37,9 +37,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from waterdata_spark.pipelines.down import down_join_transform
+from waterdata_spark.pipelines.down import conform_fact, down_join_transform
 from waterdata_spark.sources.csv import read_csv
 
 # canonical landing schema: the 16 fact columns in 2017+ header order
@@ -104,38 +103,11 @@ def read_fact_landing_stream(
     )
 
 
-def conform_fact_stream(fact: DataFrame) -> DataFrame:
-    """Streaming twin of down_csv_stage's fact path (pipelines/
-    down.py): PWSID cast, exact dedup, PDF-artifact repair, trims,
-    date de-spacing — same operations in the same order, so batch and
-    stream agree row-for-row.
-
-    ``dropDuplicates()`` is the streaming form of batch ``distinct()``
-    — stateful, exact, and GLOBAL across micro-batches (a duplicate
-    arriving years later is still dropped, which is precisely what the
-    batch rerun-over-all-files achieves). Unwatermarked state is the
-    right call for the bounded yearly corpus; unbounded feeds key the
-    state by content sha2 with a watermark (ops.dedup_stream).
-    """
-    return (
-        fact.withColumn("PWSID", F.col("PWSID").cast("long"))
-        .dropDuplicates()
-        .withColumn(
-            "Sample Type",
-            F.when(F.col("Sample Type") == "DISTRIBUTIO N", "DISTRIBUTION").otherwise(
-                F.col("Sample Type")
-            ),
-        )
-        .withColumn("SYSTEM NAME", F.trim("SYSTEM NAME"))
-        .withColumn("Sample Date", F.regexp_replace("Sample Date", r"\s", ""))
-    )
-
-
 def down_stream(spark: SparkSession, site_sub: DataFrame, landing_dir: str) -> DataFrame:
     """The full incremental down pipeline: landing-zone file stream →
     conform → hierarchical fallback join against the STATIC site dim
     (the dim changes on its own slow cadence; each micro-batch joins
     the current snapshot). Returns a streaming DataFrame; drive it
     with ops.run_stream_to_memory or a real sink."""
-    fact = conform_fact_stream(read_fact_landing_stream(spark, landing_dir))
+    fact = conform_fact(read_fact_landing_stream(spark, landing_dir))
     return down_join_transform(site_sub.localCheckpoint(eager=True), fact)
