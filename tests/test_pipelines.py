@@ -6,69 +6,27 @@ reconciliation join reproduces matches across the two channels."""
 from __future__ import annotations
 
 import glob
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.xlsx_util import write_xlsx
+from waterdata_spark.operators.expectations import ExpectationError
 from waterdata_spark.pipelines.compare import compare_pipeline
 from waterdata_spark.pipelines.direct import direct_pipeline, read_direct_workbook
 from waterdata_spark.pipelines.down import down_csv_stage, down_join_stage
-
-REF_DOWN = "/root/reference/down"
-HAVE_REF = os.path.exists(f"{REF_DOWN}/csvdispSPIp1.csv")
-FIXTURES_W = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "w")
-
-
-def _stage_down_pages(root: str) -> None:
-    """Rebuild the reference's raw down pages from the staged
-    ``fixtures/w`` parquet (tools/stage_w_fixtures.py read them through
-    the engine's own readers, all-string): 4 SPI and 2 BI CSV pages,
-    ResultsSite.xlsx, and one fact CSV per year keyed by the last 4
-    characters of the de-spaced ``Sample Date``. 2014-2016 keep the
-    fixture's column order, 2017+ use the later header order, so the
-    by-name union (§1.3) is exercised as on the real extracts."""
-    import numpy as np
-    import pandas as pd
-
-    from waterdata_spark.streaming.down_stream import FACT_COLUMNS
-
-    fx = {n: pd.read_parquet(f"{FIXTURES_W}/{n}.parquet") for n in ("spi", "bi", "sites", "data")}
-    for name, n_pages in (("SPI", 4), ("BI", 2)):
-        df = fx[name.lower()]
-        for i, rows in enumerate(np.array_split(np.arange(len(df)), n_pages), start=1):
-            df.iloc[rows].to_csv(f"{root}/csvdisp{name}p{i}.csv", index=False)
-    sites = fx["sites"].astype(object).where(fx["sites"].notna(), None)
-    write_xlsx(f"{root}/ResultsSite.xlsx", {"Sheet1": [list(sites.columns), *sites.values.tolist()]})
-    data = fx["data"]
-    years = data["Sample Date"].str.replace(r"\s", "", regex=True).str[-4:]
-    for y in sorted(years.unique()):
-        cols = list(data.columns) if y <= "2016" else FACT_COLUMNS
-        data.loc[years == y, cols].to_csv(f"{root}/rptinfo{y}.csv", index=False)
+from waterdata_spark.sources.down_pages import FIXTURES_W, down_page_paths, down_pages_dir, write_xlsx
 
 
 @pytest.fixture(scope="module")
-def down_dir(tmp_path_factory):
-    """The reference's down pages when present, else the same pages
-    staged from ``fixtures/w``."""
-    if HAVE_REF:
-        return REF_DOWN
-    root = str(tmp_path_factory.mktemp("down_pages"))
-    _stage_down_pages(root)
-    return root
+def down_dir():
+    """The reference's down pages, staged from ``fixtures/w``."""
+    return down_pages_dir()
 
 
 @pytest.fixture(scope="module")
 def down_outputs(spark, down_dir):
-    site_sub, data = down_csv_stage(
-        spark,
-        spi_paths=sorted(glob.glob(f"{down_dir}/csvdispSPIp*.csv")),
-        bi_paths=sorted(glob.glob(f"{down_dir}/csvdispBIp*.csv")),
-        sites_xlsx=f"{down_dir}/ResultsSite.xlsx",
-        data_paths=sorted(glob.glob(f"{down_dir}/rptinfo*.csv")),
-    )
-    return site_sub.cache(), data.cache()
+    site_sub, data = down_csv_stage(spark, **down_page_paths(down_dir))
+    return site_sub, data.cache()
 
 
 class TestDownPipeline:
@@ -143,6 +101,98 @@ class TestDownJoinTiebreak:
         assert outs[0] == outs[1]
 
 
+def _small_down_pages(root, bi_population: str | None = None) -> dict:
+    """Down pages cut from ``fixtures/w``: one SPI row and the BI row on
+    its (PWSID, SYSTEM NAME, SITE ID) key, 3 sites rows (the matched one
+    first) and one fact CSV of that system's rows. ``bi_population``
+    overwrites the BI row's POPULATION SERVED."""
+    import pandas as pd
+
+    fx = {n: pd.read_parquet(f"{FIXTURES_W}/{n}.parquet") for n in ("spi", "bi", "sites", "data")}
+    keys = ["PWSID", "SYSTEM NAME", "SITE ID"]
+    pairs = fx["spi"].merge(fx["bi"], on=keys, suffixes=("", "_bi"))
+    key = pairs[pairs["POPULATION SERVED"] == pairs["POPULATION SERVED_bi"]].iloc[0][keys]
+    spi = fx["spi"][(fx["spi"][keys] == key).all(axis=1)].head(1)
+    bi = fx["bi"][(fx["bi"][keys] == key).all(axis=1)].head(1).copy()
+    if bi_population is not None:
+        bi["POPULATION SERVED"] = bi_population
+    sites = fx["sites"]
+    sites = pd.concat([sites[sites["SITE_ID"] == key["SITE ID"]], sites[sites["SITE_ID"] != key["SITE ID"]].head(2)])
+    sites = sites.astype(object).where(sites.notna(), None)
+    data = fx["data"][fx["data"]["PWSID"] == key["PWSID"]].head(50)
+    pages = {
+        "spi_paths": [f"{root}/spi.csv"],
+        "bi_paths": [f"{root}/bi.csv"],
+        "sites_xlsx": f"{root}/sites.xlsx",
+        "data_paths": [f"{root}/rptinfo2017.csv"],
+    }
+    spi.to_csv(pages["spi_paths"][0], index=False)
+    bi.to_csv(pages["bi_paths"][0], index=False)
+    write_xlsx(pages["sites_xlsx"], {"Sheet1": [list(sites.columns), *sites.values.tolist()]})
+    data.to_csv(pages["data_paths"][0], index=False)
+    return pages
+
+
+class TestDownStageGates:
+    def test_consistency_gate_raises_inside_csv_stage(self, spark, tmp_path):
+        """C42: SPI and BI disagree on POPULATION SERVED for a matched
+        key. The gate is an observation on the stage's own eager
+        materialization, so the error must surface from
+        ``down_csv_stage`` itself, before any caller action."""
+        (tmp_path / "ok").mkdir()
+        (tmp_path / "bad").mkdir()
+        site_sub, _ = down_csv_stage(spark, **_small_down_pages(tmp_path / "ok"))
+        assert site_sub.count() == 1
+        with pytest.raises(ExpectationError, match="POPULATION SERVED"):
+            down_csv_stage(spark, **_small_down_pages(tmp_path / "bad", bi_population="987654321"))
+
+    def test_site_dim_materialized_once(self, spark, tmp_path, monkeypatch):
+        """csv stage -> join stage -> stream: the site dimension's DAG
+        (xlsx parse, SPI/BI outer join, C42 gate) runs exactly once, and
+        exactly one frame is materialized. A counting UDF on the sites
+        rows ticks once per row per run; the DataFrame materialization
+        methods count their calls."""
+        from waterdata_spark.pipelines import down
+        from waterdata_spark.sources.excel import read_excel_sheet
+        from waterdata_spark.streaming.down_stream import down_stream, stage_yearly_facts
+
+        materialized = []
+        frame_cls = type(spark.range(1))
+        for name in ("localCheckpoint", "checkpoint", "persist", "cache"):
+            method = getattr(frame_cls, name)
+            monkeypatch.setattr(
+                frame_cls, name, lambda self, *a, _m=method, _n=name, **k: materialized.append(_n) or _m(self, *a, **k)
+            )
+        ticks = spark.sparkContext.accumulator(0)
+
+        @F.udf("boolean")
+        def tick(_):
+            ticks.add(1)
+            return True
+
+        monkeypatch.setattr(
+            down, "read_excel_sheet", lambda *a, **k: read_excel_sheet(*a, **k).filter(tick("SITE_ID"))
+        )
+        pages = _small_down_pages(tmp_path)
+        site_sub, data = down.down_csv_stage(spark, **pages)
+        assert ticks.value == 3
+        joined = down.down_join_stage(spark, site_sub, data)
+        assert joined.count() == data.count() > 0
+        landing = str(tmp_path / "landing")
+        stage_yearly_facts(spark, pages["data_paths"], landing)
+        q = (
+            down_stream(spark, site_sub, landing)
+            .writeStream.format("memory")
+            .queryName("down_once")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert spark.table("down_once").count() == joined.count()
+        assert ticks.value == 3
+        assert materialized == ["localCheckpoint"]
+
+
 def _direct_fixture_sheets():
     si_header = [
         "PWSID", "SYSTYPE", "EPID", "SPID", "SYSNAME", "POPL", "AREACITY",
@@ -177,8 +227,6 @@ class TestDirectPipeline:
         assert rows[(6430002, "999")]["MAIL_ZIP"] == "16001"  # loose tier
 
     def test_range_gate_fires(self, spark, tmp_path):
-        from waterdata_spark.operators.expectations import ExpectationError
-
         sheets = _direct_fixture_sheets()
         sheets["System Info"][1][2] = 999  # EPID out of [100,199]
         p = write_xlsx(str(tmp_path / "bad.xlsx"), sheets)

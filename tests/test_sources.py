@@ -10,8 +10,8 @@ import os
 
 import pytest
 
-from tests.xlsx_util import write_xlsx
-from waterdata_spark.sources.csv import read_csv_multi
+from waterdata_spark.sources.csv import csv_headers, read_csv, read_csv_multi
+from waterdata_spark.sources.down_pages import write_xlsx
 from waterdata_spark.sources.excel import read_excel_sheet, read_excel_sheets
 from waterdata_spark.sources.pdf_table import (
     fake_pdf_text_extractor,
@@ -32,6 +32,43 @@ class TestCsv:
         df = read_csv_multi(spark, [str(tmp_path / "a.csv"), str(tmp_path / "b.csv")])
         rows = sorted((r["x"], r["y"]) for r in df.collect())
         assert rows == [("1", "2"), ("10", "20")]
+
+    def test_multi_matches_per_file_union(self, spark, tmp_path):
+        """Differential: header-grouped scans give the same columns (names
+        and order) and rows as per-file ``read_csv`` + ``unionByName``, over
+        two header orders, a quoted header with a comma, a UTF-8 BOM, and
+        empty and duplicate header names; finding the headers (and building
+        the union) starts no Spark job."""
+        from functools import reduce
+
+        files = {
+            "a.csv": "a,b,c\n1,2,3\n",
+            "b.csv": "c,a,b\n6,4,5\n",
+            "q.csv": '"x,y",a\n"7,8",9\n',
+            "bom.csv": "\ufeffb,a\n11,10\n",
+            "dup.csv": "a,,a,b,B\n12,13,14,15,16\n",
+            "a2.csv": "a,b,c\n17,18,19\n",
+        }
+        for name, text in files.items():
+            (tmp_path / name).write_text(text, encoding="utf-8")
+        paths = [str(tmp_path / n) for n in files]
+
+        sc = spark.sparkContext
+        group = "csv-header-discovery"
+        sc.setJobGroup(group, "header discovery must start no job")
+        try:
+            headers = csv_headers(spark, paths)
+            got = read_csv_multi(spark, paths)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        want = reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=True), [read_csv(spark, p) for p in paths]
+        )
+        assert headers[3] == ["b", "a"]  # BOM stripped
+        assert headers[4] == ["a0", "_c1", "a2", "b3", "B4"]
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(map(tuple, want.collect()), key=repr)
 
     @pytest.mark.skipif(not os.path.exists(REF_DOWN), reason="reference data absent")
     def test_reference_yearly_files(self, spark):

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from waterdata_spark.functions.cleaning import coalesce_suffixed, strip_float_suffix
 from waterdata_spark.operators.expectations import (
-    expect_column_consistency,
+    expect_column_consistency_observed,
     expect_row_count_preserved_observed,
 )
 from waterdata_spark.operators.fallback_join import fallback_join
@@ -101,7 +101,18 @@ def down_csv_stage(
     """Conform stage (down/down_water_prep.py:249-426): union the dim
     pages + yearly fact CSVs by name, assemble the site dimension via
     outer join + coalesce + consistency gate, clean the fact table.
-    Returns (site_sub, data)."""
+    Returns (site_sub, data).
+
+    ``site_sub`` comes back materialized: one eager local checkpoint at
+    the end of the stage, whose job also evaluates the C42 gate (an
+    observation on the pre-coalesce frame), so the gate raises
+    ``ExpectationError`` before this function returns and costs no job
+    of its own. This mirrors the reference's intermediate CSV
+    (SITE_PREP, :408,454): the join stage, its three tier dedups and
+    the streaming join read the dim as given instead of re-running the
+    xlsx parse + outer join. ``data`` stays lazy — callers wanting a
+    durable fact boundary use checkpoint_parquet (C7), exactly like the
+    reference's DATA_PREP."""
     spi = read_csv_multi(spark, spi_paths).withColumnRenamed("PRMRY_FAC_ID", "PRIMARY FACILITY ID")
     bi = read_csv_multi(spark, bi_paths)
     sites = read_excel_sheet(spark, sites_xlsx)
@@ -122,8 +133,10 @@ def down_csv_stage(
     site_df = site_df.withColumn("SYSTEM NAME", F.trim("SYSTEM NAME"))
 
     # C42 gate BEFORE coalescing (the reference checks X vs X_y where both
-    # present, :324-360) — one aggregation pass
-    expect_column_consistency(site_df, [(c, c + "_y") for c in SHARED_SPI_BI_COLS])
+    # present, :324-360) — observed during the checkpoint below
+    site_df, check_consistency = expect_column_consistency_observed(
+        site_df, [(c, c + "_y") for c in SHARED_SPI_BI_COLS]
+    )
     site_df = coalesce_suffixed(site_df, SHARED_SPI_BI_COLS)
     site_df = site_df.distinct()
 
@@ -145,8 +158,8 @@ def down_csv_stage(
                 F.col("ZIP_CODE"),
             ),
         )
-    )
-
+    ).localCheckpoint(eager=True)
+    check_consistency()
     return site_sub, conform_fact(data)
 
 
@@ -197,8 +210,10 @@ def down_join_transform(site_sub: DataFrame, data: DataFrame) -> DataFrame:
     broadcast left joins, so ``data`` may be a STREAMING DataFrame
     (stream-static join, append mode) — the incremental form of the
     reference lifecycle where each year's extract arrives as a new
-    file (streaming/down_stream.py). Batch callers wanting the
-    row-count gate and the dim materialization use
+    file (streaming/down_stream.py). The site side is read as given:
+    :func:`down_csv_stage` returns it materialized, so the three tier
+    dedups rescan that checkpoint, not the xlsx parse + outer join.
+    Batch callers wanting the row-count gate use
     :func:`down_join_stage`.
     """
     site = _normalize_sample_location(site_sub, "X")
@@ -257,17 +272,15 @@ def down_join_transform(site_sub: DataFrame, data: DataFrame) -> DataFrame:
 
 
 def down_join_stage(spark: SparkSession, site_sub: DataFrame, data: DataFrame) -> DataFrame:
-    """Batch entry for the join stage: materialize the (tiny) site dim
-    once at the stage boundary, run :func:`down_join_transform`, and
-    enforce the C43 row-count law (:540-543).
+    """Batch entry for the join stage: run :func:`down_join_transform`
+    and enforce the C43 row-count law (:540-543).
 
-    The dim materialization mirrors the reference's intermediate CSV
-    (SITE_PREP, :408,454): without it the site DAG (xlsx parse + outer
-    join + consistency gate) re-executes for every tier's dim dedup.
-    The fact stays lazy — callers wanting a durable boundary use
-    checkpoint_parquet (C7), exactly like the reference's DATA_PREP.
+    ``site_sub`` is taken as given — :func:`down_csv_stage` already
+    materialized it; a caller passing a lazy dim re-runs its DAG for
+    every tier's dim dedup. The fact stays lazy — callers wanting a
+    durable boundary use checkpoint_parquet (C7), exactly like the
+    reference's DATA_PREP.
     """
-    site_sub = site_sub.localCheckpoint(eager=True)
     # C43 as a one-pass observation: the input count materializes
     # during the same action that evaluates the join output.
     data, check_rows = expect_row_count_preserved_observed(data)

@@ -33,6 +33,7 @@ from waterdata_spark.operators.dedup import exact_dedup, priority_dedup
 from waterdata_spark.operators.expand import expand_keys
 from waterdata_spark.operators.fallback_join import fallback_join
 from waterdata_spark.schemas import load_table
+from waterdata_spark.sources.down_pages import FIXTURES_W, down_page_paths, down_pages_dir
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2431,7 +2432,7 @@ def q31_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     # (Sample Location / SYSTEM NAME, ZIP_CODE, SITE_ID) plus ZIP_CODE
     # itself — any dedup tie beyond those columns has equal ZIP on
     # every candidate, so the matched counts are invariant.
-    """
+    f"""
     WITH spi_bi AS (
       SELECT
         COALESCE(s."PWSID", b."PWSID") AS "PWSID",
@@ -2439,15 +2440,15 @@ def q31_set_ops(spark: SparkSession, sf: str) -> DataFrame:
         COALESCE(s."SITE ID", b."SITE ID") AS "SITE_ID",
         s."SAMPLE POINT ID"
       FROM (SELECT * REPLACE (TRY_CAST("PWSID" AS BIGINT) AS "PWSID")
-            FROM read_parquet('/root/repo/fixtures/w/spi.parquet')) s
+            FROM read_parquet('{FIXTURES_W}/spi.parquet')) s
       FULL OUTER JOIN (SELECT * REPLACE (TRY_CAST("PWSID" AS BIGINT) AS "PWSID")
-            FROM read_parquet('/root/repo/fixtures/w/bi.parquet')) b
+            FROM read_parquet('{FIXTURES_W}/bi.parquet')) b
         ON s."PWSID" = b."PWSID" AND s."SYSTEM NAME" = b."SYSTEM NAME"
        AND s."SITE ID" = b."SITE ID"
     ), site_df AS (
       SELECT sb.*, st."ZIP_CODE"
       FROM (SELECT * REPLACE (trim("SYSTEM NAME") AS "SYSTEM NAME") FROM spi_bi) sb
-      LEFT JOIN read_parquet('/root/repo/fixtures/w/sites.parquet') st
+      LEFT JOIN read_parquet('{FIXTURES_W}/sites.parquet') st
         ON sb."SITE_ID" = st."SITE_ID"
     ), site_n AS (
       SELECT "PWSID",
@@ -2474,7 +2475,7 @@ def q31_set_ops(spark: SparkSession, sf: str) -> DataFrame:
         ORDER BY "SYSTEM NAME" DESC NULLS LAST, "ZIP_CODE" ASC NULLS LAST,
                  "SITE_ID" ASC NULLS LAST) = 1
     ), raw AS (
-      SELECT DISTINCT * FROM read_parquet('/root/repo/fixtures/w/data.parquet')
+      SELECT DISTINCT * FROM read_parquet('{FIXTURES_W}/data.parquet')
     ), fact_n AS (
       SELECT TRY_CAST(trim("PWSID") AS BIGINT) AS "PWSID",
              trim("SYSTEM NAME") AS "SYSTEM NAME",
@@ -2517,21 +2518,9 @@ def q31_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     tags=["pipeline", "water", "composite"],
 )
 def w01_down_pipeline(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-
     from waterdata_spark.pipelines.down import down_csv_stage, down_join_stage
 
-    ref = "/root/reference/down"
-    if not os.path.exists(f"{ref}/csvdispSPIp1.csv"):
-        return spark.createDataFrame([], "match_tier int, n long")
-    site_sub, data = down_csv_stage(
-        spark,
-        spi_paths=sorted(glob.glob(f"{ref}/csvdispSPIp*.csv")),
-        bi_paths=sorted(glob.glob(f"{ref}/csvdispBIp*.csv")),
-        sites_xlsx=f"{ref}/ResultsSite.xlsx",
-        data_paths=sorted(glob.glob(f"{ref}/rptinfo*.csv")),
-    )
+    site_sub, data = down_csv_stage(spark, **down_page_paths(down_pages_dir()))
     out = down_join_stage(spark, site_sub, data)
     return (
         out.withColumn(
@@ -2553,9 +2542,9 @@ def w01_down_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # conform both channels (trims, M/d/yyyy parses, sentinel→1/9/1999
     # compat on the down side only) → 7-key inner join → per-SAMPTYPE
     # counts.
-    """
+    f"""
     WITH raw AS (
-      SELECT DISTINCT * FROM read_parquet('/root/repo/fixtures/w/data.parquet')
+      SELECT DISTINCT * FROM read_parquet('{FIXTURES_W}/data.parquet')
     ), fact0 AS (
       SELECT * REPLACE (
         CASE WHEN "Sample Type" = 'DISTRIBUTIO N' THEN 'DISTRIBUTION'
@@ -2636,22 +2625,10 @@ def w01_down_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     tags=["pipeline", "water", "composite"],
 )
 def w02_compare_reconciliation(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-
     from waterdata_spark.pipelines.compare import compare_pipeline
     from waterdata_spark.pipelines.down import down_csv_stage, down_join_stage
 
-    ref = "/root/reference/down"
-    if not os.path.exists(f"{ref}/csvdispSPIp1.csv"):
-        return spark.createDataFrame([], "SAMPTYPE string, n_matched long, n_systems long")
-    site_sub, data = down_csv_stage(
-        spark,
-        spi_paths=sorted(glob.glob(f"{ref}/csvdispSPIp*.csv")),
-        bi_paths=sorted(glob.glob(f"{ref}/csvdispBIp*.csv")),
-        sites_xlsx=f"{ref}/ResultsSite.xlsx",
-        data_paths=sorted(glob.glob(f"{ref}/rptinfo*.csv")),
-    )
+    site_sub, data = down_csv_stage(spark, **down_page_paths(down_pages_dir()))
     down_prod = down_join_stage(spark, site_sub, data)
 
     # deterministic direct-channel derivation: md5-sample 25% of the

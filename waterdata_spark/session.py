@@ -19,40 +19,68 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "default_parallelism"]
+__all__ = ["get_spark", "launch_conf", "default_parallelism"]
+
+#: driver JVM flags, passed as ``spark.driver.defaultJavaOptions`` so
+#: ``spark.driver.extraJavaOptions`` stays free for callers (heap,
+#: tmpdir); both apply when the JVM is launched.
+#:
+#: ``-XX:CICompilerCount=2``: a cold batch run's CPU is mostly the
+#: driver JVM's JIT, not Spark tasks. In a traced perfbench ``water_etl``
+#: run (4-core host, HotSpot's default of 3 compiler threads there) the
+#: cold pass used 84 s of process CPU and 8 s of Spark task CPU, and the
+#: JVM's compiler threads used 58 s over its life (session start plus
+#: that pass). The flag alone took ``water_etl`` ``cpu_s`` from 71 to
+#: 58 s (median of 3 runs each, on top of the down pipeline's job cuts;
+#: compiler-thread CPU 50 -> 33 s). ``olap_sf1`` ``cpu_s`` stayed flat,
+#: its ``setup_s`` (session plus one cold warm-up pass) rose 8%, and
+#: warm sf1 q01/q03/q06/q19 stayed within the run-to-run spread.
+#: Two alternatives were measured and rejected:
+#:
+#: - C1-only JIT (``-XX:TieredStopAtLevel=1``): ``water_etl`` ``cpu_s``
+#:   -48% against the same code without a flag, but warm sf1 queries
+#:   (min of 5 repeats) went q01 2.8 -> 7.8 s and q06 3.7 -> 6.5 s,
+#:   because the steady-state hot loops never reach C2;
+#: - 10x C2 compile thresholds: ``olap_sf1`` warm ``wall_s`` +10% (a
+#:   prototype measurement, not repeated on the final code).
+#:
+#: Compiler-thread CPU does not show in Spark's event log
+#: (``executorCpuTime`` counts task threads only); read it per thread
+#: from ``/proc/<jvm>/task/*/stat`` (names ``C1/C2 CompilerThre...``).
+DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def get_spark(
-    app_name: str = "waterdata-spark",
+def launch_conf(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+) -> dict[str, str]:
+    """The conf :func:`get_spark` launches with; ``extra_conf`` wins
+    over every default.
 
     Declarative-first engine: every knob here exists so Catalyst/AQE
     can do the physical planning — we never hand-schedule.
     """
     cpus = default_parallelism()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+    conf = {
+        "spark.master": master or f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
+        "spark.ui.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "134217728",
         # Auto-broadcast threshold: dims in this workload are KB-MB;
         # 64 MB keeps every dim join a broadcast-hash join.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # r12: disable InferWindowGroupLimit (partial top-k below the
         # window exchange). The rule pays a FULL extra local sort of
         # the window input before the shuffle and only wins when a key
@@ -68,11 +96,23 @@ def get_spark(
         # tasks at the same rows-per-key, so co-location never
         # improves; a LOW-cardinality ranking (top-k per country)
         # should re-enable via extra_conf.
-        .config("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+        "spark.sql.optimizer.windowGroupLimitThreshold": "-1",
+    }
+    return conf | (extra_conf or {})
+
+
+def get_spark(
+    app_name: str = "waterdata-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) the engine's SparkSession with
+    :func:`launch_conf`. JVM options only take effect when this call
+    launches the driver JVM, not when it reuses a running one."""
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in launch_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

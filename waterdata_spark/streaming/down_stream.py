@@ -107,7 +107,9 @@ def down_stream(spark: SparkSession, site_sub: DataFrame, landing_dir: str) -> D
     """The full incremental down pipeline: landing-zone file stream →
     conform → hierarchical fallback join against the STATIC site dim
     (the dim changes on its own slow cadence; each micro-batch joins
-    the current snapshot). Returns a streaming DataFrame; drive it
-    with ops.run_stream_to_memory or a real sink."""
+    the current snapshot). ``site_sub`` is taken as given, as
+    :func:`~waterdata_spark.pipelines.down.down_csv_stage` returns it
+    (materialized once). Returns a streaming DataFrame; drive it with
+    ops.run_stream_to_memory or a real sink."""
     fact = conform_fact(read_fact_landing_stream(spark, landing_dir))
-    return down_join_transform(site_sub.localCheckpoint(eager=True), fact)
+    return down_join_transform(site_sub, fact)
