@@ -9,7 +9,7 @@ from waterdata_spark.operators.dedup import dedup_any, exact_dedup, priority_ded
 from waterdata_spark.operators.expand import expand_keys
 from waterdata_spark.operators.expectations import (
     ExpectationError,
-    expect_column_consistency,
+    expect_column_consistency_observed,
     expect_range,
     expect_row_count_preserved,
     expect_schema,
@@ -467,10 +467,14 @@ class TestExpectations:
 
     def test_consistency_gate(self, spark):
         ok = spark.createDataFrame([("x", "x"), ("y", None)], "a string, a_y string")
-        expect_column_consistency(ok, [("a", "a_y")])
-        bad = spark.createDataFrame([("x", "z")], "a string, a_y string")
-        with pytest.raises(ExpectationError):
-            expect_column_consistency(bad, [("a", "a_y")])
+        observed, check = expect_column_consistency_observed(ok, [("a", "a_y")])
+        assert observed.count() == 2
+        check()
+        bad = spark.createDataFrame([("x", "z"), ("y", "y")], "a string, a_y string")
+        observed, check = expect_column_consistency_observed(bad, [("a", "a_y")])
+        assert observed.count() == 2
+        with pytest.raises(ExpectationError, match="a!=a_y"):
+            check()
 
     def test_row_count_preserved(self, spark):
         a = spark.range(5)

@@ -70,6 +70,12 @@ class TestCsv:
         assert got.columns == want.columns
         assert sorted(map(tuple, got.collect()), key=repr) == sorted(map(tuple, want.collect()), key=repr)
 
+    def test_multi_rejects_non_files(self, spark, tmp_path):
+        (tmp_path / "a.csv").write_text("a\n1\n")
+        for p in [tmp_path, tmp_path / "*.csv", tmp_path / "missing.csv"]:
+            with pytest.raises(ValueError, match="not a file"):
+                read_csv_multi(spark, [str(tmp_path / "a.csv"), str(p)])
+
     @pytest.mark.skipif(not os.path.exists(REF_DOWN), reason="reference data absent")
     def test_reference_yearly_files(self, spark):
         """The shipped rptinfo CSVs: 2014-2016 vs 2017+ column orders

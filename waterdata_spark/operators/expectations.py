@@ -73,41 +73,35 @@ def expect_range(
     return expect_ranges(df, [(col, lo, hi)], allow_null=allow_null)
 
 
-def _consistency_aggs(pairs: list[tuple[str, str]]) -> list[Column]:
-    return [
-        F.sum(
-            F.when(F.col(b).isNotNull() & (F.col(a) != F.col(b)), 1).otherwise(0)
-        ).alias(f"{a}!={b}")
-        for a, b in pairs
-    ]
-
-
-def _raise_inconsistent(row: dict) -> None:
-    bad = {k: v for k, v in row.items() if v}
-    if bad:
-        raise ExpectationError(f"expect_column_consistency: mismatches {bad}")
-
-
-def expect_column_consistency(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
+def expect_column_consistency_observed(df: DataFrame, pairs: list[tuple[str, str]]):
     """C42: after an outer join, assert X == X_y wherever X_y is not
     null, for each (X, X_y) pair (down/down_water_prep.py:324-360).
-    All pairs checked in ONE aggregation pass."""
-    _raise_inconsistent(df.agg(*_consistency_aggs(pairs)).collect()[0].asDict())
-    return df
 
-
-def expect_column_consistency_observed(df: DataFrame, pairs: list[tuple[str, str]]):
-    """C42, single-pass form: the mismatch counts are an observation on
-    ``df``, so they materialize during an action the caller runs anyway
-    (one job fewer than :func:`expect_column_consistency`). Returns
-    ``(observed, check)``; call ``check()`` after an EAGER action over
-    ``observed`` — it raises ``ExpectationError`` on any mismatch, and
-    blocks if no action over ``observed`` has run."""
+    The mismatch counts of all pairs are one observation on ``df``, so
+    they materialize during an action the caller runs anyway instead
+    of a separate aggregation pass. Returns ``(observed, check)``; call
+    ``check()`` after an EAGER action over ``observed`` — it raises
+    ``ExpectationError`` on any mismatch, and blocks if no action over
+    ``observed`` has run."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    observed = df.observe(obs, *_consistency_aggs(pairs))
-    return observed, lambda: _raise_inconsistent(obs.get)
+    observed = df.observe(
+        obs,
+        *[
+            F.sum(
+                F.when(F.col(b).isNotNull() & (F.col(a) != F.col(b)), 1).otherwise(0)
+            ).alias(f"{a}!={b}")
+            for a, b in pairs
+        ],
+    )
+
+    def check() -> None:
+        bad = {k: v for k, v in obs.get.items() if v}
+        if bad:
+            raise ExpectationError(f"expect_column_consistency: mismatches {bad}")
+
+    return observed, check
 
 
 def expect_row_count_preserved(before: DataFrame, after: DataFrame) -> DataFrame:

@@ -19,11 +19,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "launch_conf", "default_parallelism"]
+__all__ = ["get_spark", "launch_conf", "default_parallelism", "jit_flag_applies"]
 
-#: driver JVM flags, passed as ``spark.driver.defaultJavaOptions`` so
-#: ``spark.driver.extraJavaOptions`` stays free for callers (heap,
-#: tmpdir); both apply when the JVM is launched.
+#: driver JVM flags. :func:`launch_conf` puts them in front of the
+#: caller's ``spark.driver.extraJavaOptions`` (HotSpot takes the last
+#: of a repeated ``-XX`` flag, so a caller's own setting wins) and leaves
+#: ``spark.driver.defaultJavaOptions`` to the site's spark-defaults.conf.
+#: They apply only where they were measured: :func:`jit_flag_applies`.
 #:
 #: ``-XX:CICompilerCount=2``: a cold batch run's CPU is mostly the
 #: driver JVM's JIT, not Spark tasks. In a traced perfbench ``water_etl``
@@ -34,7 +36,10 @@ __all__ = ["get_spark", "launch_conf", "default_parallelism"]
 #: 58 s (median of 3 runs each, on top of the down pipeline's job cuts;
 #: compiler-thread CPU 50 -> 33 s). ``olap_sf1`` ``cpu_s`` stayed flat,
 #: its ``setup_s`` (session plus one cold warm-up pass) rose 8%, and
-#: warm sf1 q01/q03/q06/q19 stayed within the run-to-run spread.
+#: warm sf1 q01/q03/q06/q19 stayed within the run-to-run spread. On a
+#: larger host HotSpot starts 4 (8-15 CPUs) to 15 (32-63 CPUs) compiler
+#: threads, and a cut to 2 there was never measured, so the flag is
+#: left out.
 #: Two alternatives were measured and rejected:
 #:
 #: - C1-only JIT (``-XX:TieredStopAtLevel=1``): ``water_etl`` ``cpu_s``
@@ -54,13 +59,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def jit_flag_applies(cpus: int | None = None) -> bool:
+    """Whether :data:`DRIVER_JAVA_OPTIONS` goes to the driver JVM: only
+    where HotSpot's own default is 3 compiler threads, i.e. 4-7 CPUs,
+    the setting it was measured on. ``cpus`` defaults to the affinity
+    mask the driver JVM inherits from this process."""
+    if cpus is None:
+        cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+    return 4 <= cpus < 8
+
+
 def launch_conf(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> dict[str, str]:
     """The conf :func:`get_spark` launches with; ``extra_conf`` wins
-    over every default.
+    over every default, and its ``spark.driver.extraJavaOptions`` comes
+    after :data:`DRIVER_JAVA_OPTIONS`.
 
     Declarative-first engine: every knob here exists so Catalyst/AQE
     can do the physical planning — we never hand-schedule.
@@ -75,7 +91,6 @@ def launch_conf(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
         "spark.ui.enabled": "false",
         "spark.sql.files.maxPartitionBytes": "134217728",
         # Auto-broadcast threshold: dims in this workload are KB-MB;
@@ -98,7 +113,11 @@ def launch_conf(
         # should re-enable via extra_conf.
         "spark.sql.optimizer.windowGroupLimitThreshold": "-1",
     }
-    return conf | (extra_conf or {})
+    conf |= extra_conf or {}
+    if jit_flag_applies():
+        key = "spark.driver.extraJavaOptions"
+        conf[key] = " ".join(filter(None, [DRIVER_JAVA_OPTIONS, conf.get(key)]))
+    return conf
 
 
 def get_spark(

@@ -50,7 +50,8 @@ def csv_headers(spark: SparkSession, paths: list[str], **options: str) -> list[l
     ``CSVOptions`` a scan would use (quotes, separator, encoding, BOM),
     and is made safe by Spark's ``makeSafeHeader`` (empty names become
     ``_c<i>``, duplicate names get their index appended). An empty file
-    has no columns. ``paths`` are files, not globs or directories.
+    has no columns. ``paths`` must name files: a glob, a directory or
+    a missing path raises ``ValueError``.
     """
     jvm = spark._jvm
     opts = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
@@ -65,7 +66,10 @@ def csv_headers(spark: SparkSession, paths: list[str], **options: str) -> list[l
     conf = spark._jsparkSession.sessionState().newHadoopConf()
     headers = []
     for p in paths:
-        line = utils.readHeaderLine(jvm.org.apache.hadoop.fs.Path(p), opts, conf)
+        path = jvm.org.apache.hadoop.fs.Path(p)
+        if not path.getFileSystem(conf).isFile(path):
+            raise ValueError(f"not a file: {p!r} (globs and directories are not expanded)")
+        line = utils.readHeaderLine(path, opts, conf)
         # a fresh parser per file: univocity strips a BOM only on a
         # parser's first line
         parser = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings())
@@ -88,6 +92,10 @@ def read_csv_multi(
     aligns the groups. Groups keep the order of their first file, so
     the columns come out in the order a per-file union would give. A
     corpus with one layout is one scan however many files it has.
+
+    ``paths`` must name files, unlike ``spark.read.csv``: a glob, a
+    directory or a missing path raises ``ValueError`` (expand globs
+    with :mod:`glob` first).
     """
     groups: dict[tuple[str, ...], list[str]] = {}
     for p, names in zip(paths, csv_headers(spark, paths, **options)):
